@@ -4,6 +4,8 @@ golden fixtures of s2_test.go and the reference's own testdata."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from cityfinder_spark.finder import CityFinder
@@ -11,15 +13,32 @@ from cityfinder_spark.sources.geonames import (
     load_geonames_cities,
     load_postal_codes,
 )
+from tests.test_nearest import THREE, _cities_df
+
+CITIES_TXT = "/root/reference/testdata/allCountries.txt"
+ZIP_TXT = "/root/reference/testdata/zipCodes.txt"
+
+# the tests that sample the reference's own rows need both sample files
+needs_samples = pytest.mark.skipif(
+    not (os.path.exists(CITIES_TXT) and os.path.exists(ZIP_TXT)),
+    reason=f"reference GeoNames samples {CITIES_TXT} / {ZIP_TXT} not present",
+)
 
 
 @pytest.fixture(scope="module")
 def finder(spark):
-    cities = load_geonames_cities(spark, "/root/reference/testdata/allCountries.txt")
-    postal = load_postal_codes(spark, "/root/reference/testdata/zipCodes.txt")
+    cities = load_geonames_cities(spark, CITIES_TXT)
+    postal = load_postal_codes(spark, ZIP_TXT)
     return CityFinder(cities, postal)
 
 
+@pytest.fixture(scope="module")
+def three_city_finder(spark):
+    # golden 3-city fixture (reference s2_test.go:12-16)
+    return CityFinder(_cities_df(spark, THREE))
+
+
+@needs_samples
 def test_find_nearest_city(spark, finder):
     sample = finder.cities.limit(1).collect()[0]
     got = finder.find_nearest_city(sample["lat"], sample["lon"])
@@ -27,11 +46,12 @@ def test_find_nearest_city(spark, finder):
     assert got["Latitude"] == sample["lat"] and got["Longitude"] == sample["lon"]
 
 
-def test_find_nearest_city_validates_range(finder):
+def test_find_nearest_city_validates_range(three_city_finder):
     with pytest.raises(ValueError):
-        finder.find_nearest_city(95.0, 0.0)  # routes.go:26-32 '400'
+        three_city_finder.find_nearest_city(95.0, 0.0)  # routes.go:26-32 '400'
 
 
+@needs_samples
 def test_find_city_by_name_exact_and_fuzzy(finder):
     sample = finder.cities.limit(5).collect()[0]
     exact = finder.find_city_by_name(sample["name"], sample["country"])
@@ -42,6 +62,7 @@ def test_find_city_by_name_exact_and_fuzzy(finder):
     assert fuzzy is not None and fuzzy["EditDist"] <= 2
 
 
+@needs_samples
 def test_find_city_by_postal_code(finder):
     sample = finder.postal.limit(1).collect()[0]
     got = finder.find_city_by_postal_code(
@@ -52,6 +73,7 @@ def test_find_city_by_postal_code(finder):
     assert miss is None
 
 
+@needs_samples
 def test_save_load_index_roundtrip(spark, finder, tmp_path):
     """S5/S6/S7 parity: persist the index tables to Parquet, reload,
     and get identical answers from all three entry points."""

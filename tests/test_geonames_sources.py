@@ -5,6 +5,8 @@ querying at a known row's own key returns that row's data."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -21,6 +23,15 @@ from cityfinder_spark.sources.geonames import (
 CITIES_TXT = "/root/reference/testdata/allCountries.txt"
 ZIP_TXT = "/root/reference/testdata/zipCodes.txt"
 
+needs_cities = pytest.mark.skipif(
+    not os.path.exists(CITIES_TXT),
+    reason=f"reference GeoNames sample {CITIES_TXT} not present",
+)
+needs_zip = pytest.mark.skipif(
+    not os.path.exists(ZIP_TXT),
+    reason=f"reference GeoNames sample {ZIP_TXT} not present",
+)
+
 
 @pytest.fixture(scope="module")
 def geonames(spark):
@@ -32,6 +43,7 @@ def postal(spark):
     return load_postal_codes(spark, ZIP_TXT).cache()
 
 
+@needs_cities
 def test_cities_scan_schema_and_skip_semantics(geonames):
     rows = geonames.collect()
     assert 0 < len(rows) <= 1000
@@ -40,12 +52,14 @@ def test_cities_scan_schema_and_skip_semantics(geonames):
         assert isinstance(r["alt_names"], list)
 
 
+@needs_zip
 def test_postal_scan_zero_value_semantics(postal):
     assert postal.count() == 1000
     # numeric fields never null (zero-value fallback, zipCodes.go:42-44)
     assert postal.where(F.col("lat").isNull() | F.col("accuracy").isNull()).count() == 0
 
 
+@needs_cities
 def test_nearest_self_consistency(spark, geonames):
     """main_test.go:158-179: query at 20 known coordinates -> a city at
     distance 0 comes back (the row itself, or an exact co-located tie
@@ -66,6 +80,7 @@ def test_nearest_self_consistency(spark, geonames):
         assert got[int(i)]["name"]
 
 
+@needs_cities
 def test_name_lookup_echoes_reference_rows(spark, geonames):
     """main_test.go:181-206 analog: exact lookup of 20 sampled
     (name, country) pairs returns a city with that name."""
@@ -85,6 +100,7 @@ def test_name_lookup_echoes_reference_rows(spark, geonames):
         assert r["name"] is not None
 
 
+@needs_zip
 def test_postal_lookup_echoes_reference_rows(spark, postal):
     """main_test.go:208-233 analog: 20 sampled (country, code) pairs
     resolve to their place names (last-write-wins on duplicates)."""
