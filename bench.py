@@ -114,20 +114,13 @@ HEADLINE = [
     "token_percentiles",
     "length_buckets",
     "vocab_topk",
-    "bpe_train",
-    "bpe_train_bytes",
-    "bpe_segment",
-    "bpe_segment_bytes",
     "bm25_search",
     "lm_score",
     "importance_sample",
     "pii_redact",
-    "url_curation",
     "tokenize_ids",
     "quality_topk",
     "doc_fingerprint",
-    "pack_sequences",
-    "bin_manifest",
     "corpus_split",
     "cluster_split",
     "count_min_df",
@@ -169,8 +162,6 @@ HEADLINE = [
     "multimodal_curation",
     "image_resize",
     "video_frame_sample",
-    "audio_features",
-    "audio_pipeline",
     "events_windowed",
     "events_decay",
     "events_asof",
@@ -251,20 +242,13 @@ _FACT_TABLE = {
     "token_percentiles": "documents",
     "length_buckets": "documents",
     "vocab_topk": "documents",
-    "bpe_train": "documents",
-    "bpe_train_bytes": "documents",
-    "bpe_segment": "documents",
-    "bpe_segment_bytes": "documents",
     "bm25_search": "documents",
     "lm_score": "documents",
     "importance_sample": "documents",
     "pii_redact": "documents",
-    "url_curation": "documents",
     "tokenize_ids": "documents",
     "quality_topk": "documents",
     "doc_fingerprint": "documents",
-    "pack_sequences": "documents",
-    "bin_manifest": "documents",
     "corpus_split": "documents",
     "decontaminate": "documents",
     "split_overlap": "documents",

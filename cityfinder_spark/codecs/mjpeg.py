@@ -1,9 +1,9 @@
 """Motion-JPEG AVI codec — stdlib struct + the codecs/jpeg.py JFIF
-codec. The real-video counterpart of the real PNG/JPEG/WAV/ADPCM
-paths: an AVI (RIFF 'AVI ') container holding one baseline-JFIF
-stream per frame ('MJPG' — the format camera/webcam pipelines emit),
-built by hand from the public AVI spec (RIFF lists 'hdrl'/'movi',
-avih + strh/strf headers, '00dc' frame chunks, 'idx1' index).
+codec. The real-video counterpart of the real PNG/JPEG paths: an AVI
+(RIFF 'AVI ') container holding one baseline-JFIF stream per frame
+('MJPG' — the format camera/webcam pipelines emit), built by hand from
+the public AVI spec (RIFF lists 'hdrl'/'movi', avih + strh/strf
+headers, '00dc' frame chunks, 'idx1' index).
 
 Decode walks the RIFF tree, pulls every '00dc' chunk and routes it
 through decode_jpeg_real — so the whole video path (container AND
@@ -109,7 +109,7 @@ def decode_mjpeg_avi(buf: bytes) -> np.ndarray:
             if cid == b"LIST":
                 walk(body_start + 4, body_start + ln)
             elif cid == b"strh" and ln >= 8 and buf[body_start : body_start + 4] == b"vids":
-                # strict-reject dispatch (the ADPCM stance): this decoder
+                # strict-reject dispatch: this decoder
                 # only speaks MJPG-in-AVI; cinepak/DV/xvid etc. would
                 # feed garbage to the JFIF decoder, so refuse up front.
                 handler = buf[body_start + 4 : body_start + 8]

@@ -60,7 +60,7 @@ def load_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...]) -> Non
 
 
 def _media_table(spark: SparkSession, kind: str, n: int) -> DataFrame:
-    """Generated media fact table (images/videos/audio), persisted once
+    """Generated media fact table (images/videos), persisted once
     per session per (kind, n) via bcast.memo_table: the generator is
     the stand-in for a STORED Iceberg table, so repeated queries should
     read it like storage, not re-run ingestion. (Generation itself is
@@ -72,13 +72,9 @@ def _media_table(spark: SparkSession, kind: str, n: int) -> DataFrame:
             from cityfinder_spark.datagen.images import images_table
 
             return images_table(spark, n)
-        if kind == "videos":
-            from cityfinder_spark.datagen.images import videos_table
+        from cityfinder_spark.datagen.images import videos_table
 
-            return videos_table(spark, n)
-        from cityfinder_spark.datagen.audio import audio_table
-
-        return audio_table(spark, n)
+        return videos_table(spark, n)
 
     return memo_table(spark, ("media", kind, n), build)
 
@@ -1776,28 +1772,6 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_stats(_docs(spark, sf_dir))
 
 
-PACK_BUDGET = 512
-
-
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GPT-style sequence packing: concatenate documents in the
-    portable-hash order and chunk into fixed token-budget bins
-    (distributed prefix sum; see operators/packing.py)."""
-    from cityfinder_spark.operators.packing import pack_sequences
-
-    return pack_sequences(_docs(spark, sf_dir), budget=PACK_BUDGET)
-
-
-def q_bin_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-bin segment manifest (the data-loader view of packing):
-    sequence+explode over each document's bin span — the manifold step
-    itself is whole-stage codegen on top of pack_sequences' two
-    exchanges."""
-    from cityfinder_spark.operators.packing import bin_manifest
-
-    return bin_manifest(_docs(spark, sf_dir), budget=PACK_BUDGET)
-
-
 def q_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic leakage-safe train/val/test assignment by the
     portable hash — a zero-shuffle codegen projection."""
@@ -1996,203 +1970,6 @@ def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vocab_topk(_docs(spark, sf_dir), k=VOCAB_K)
 
 
-def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE merge-table training (Sennrich et al. 2016 — the tokenizer
-    TRAINING step): one corpus pass collapses text to the word-
-    frequency table, then every merge iteration runs on that
-    vocabulary-sized table (operators/bpe.py). The oracle replays all
-    iterations as chained CTEs — pair counts, deterministic winner
-    (count DESC, pair ASC), relational greedy islands merge — so the
-    whole learned merge table value-hashes."""
-    from cityfinder_spark.operators.bpe import BPE_MERGES, bpe_train
-
-    return bpe_train(_docs(spark, sf_dir), n_merges=BPE_MERGES)
-
-
-def q_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE APPLY half: tokenize the corpus with the learned merge
-    table (operators/bpe.py::bpe_segment) — merges replay in rank
-    order on the distinct-word table, corpus pays one split + one
-    word equi-join. Output (doc_id, wpos, tpos, token) is
-    window-free deterministic; the oracle replays training AND
-    segmentation in one CTE chain."""
-    from cityfinder_spark.bcast import memo_value
-    from cityfinder_spark.operators.bpe import BPE_MERGES, bpe_segment, bpe_train
-
-    def build():
-        return [
-            (r.lhs, r.rhs)
-            for r in bpe_train(_docs(spark, sf_dir), n_merges=BPE_MERGES)
-            .orderBy("merge_rank")
-            .collect()
-        ]
-
-    merges = memo_value(spark, ("bpe-merges", sf_dir), build)
-    return bpe_segment(_docs(spark, sf_dir), merges)
-
-
-def q_bpe_train_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-level BPE (the GPT-2-style alphabet: UTF-8 bytes as
-    fixed-width hex symbols, no end-of-word marker) trained on the
-    DRIVER fast path — the count-guarded incremental heap trainer
-    (operators/bpe.py::_train_driver). One contract key therefore
-    oracle-gates BOTH the byte alphabet and the in-memory trainer:
-    the DuckDB oracle replays the same merges as chained relational
-    CTEs over hex(encode(w)), so any winner/tie-break divergence
-    between the heap and the relational algebra hash-mismatches."""
-    from cityfinder_spark.operators.bpe import BPE_MERGES, bpe_train
-
-    return bpe_train(
-        _docs(spark, sf_dir), n_merges=BPE_MERGES, strategy="driver", mode="bytes"
-    )
-
-
-def q_bpe_segment_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-level BPE apply on the BROADCAST fast path (round-5 key):
-    the merges learned by the driver trainer (byte alphabet) are
-    broadcast and replayed per DISTINCT word in ONE Arrow pass via
-    the rank-indexed segmenter (operators/bpe.py::
-    _apply_merges_indexed — symbol->ranks inverted index + lazy heap,
-    per-word cost independent of total merge count). One key
-    therefore oracle-gates the byte alphabet AND the indexed
-    broadcast segmenter: the DuckDB oracle replays training and
-    segmentation relationally over hex(encode(w)), so any divergence
-    in the fast path's replay order hash-mismatches."""
-    from cityfinder_spark.bcast import memo_value
-    from cityfinder_spark.operators.bpe import BPE_MERGES, bpe_segment, bpe_train
-
-    def build():
-        return [
-            (r.lhs, r.rhs)
-            for r in bpe_train(
-                _docs(spark, sf_dir), n_merges=BPE_MERGES,
-                strategy="driver", mode="bytes",
-            )
-            .orderBy("merge_rank")
-            .collect()
-        ]
-
-    merges = memo_value(spark, ("bpe-merges-bytes", sf_dir), build)
-    return bpe_segment(
-        _docs(spark, sf_dir), merges, strategy="broadcast", mode="bytes"
-    )
-
-
-def _o_bpe_segment(mode: str = "char") -> str:
-    from cityfinder_spark.operators.bpe import BPE_MERGES
-
-    return f"""
-    WITH {_o_bpe_cte(BPE_MERGES, mode)}
-    SELECT d.doc_id, d.wpos, tp.tpos, tp.token
-    FROM (
-      SELECT doc_id, p.wpos, p.w FROM (
-        SELECT doc_id,
-               unnest(list_transform(generate_series(1, len(sl)),
-                 i -> struct_pack(wpos := i - 1, w := sl[i]))) AS p
-        FROM (SELECT doc_id, string_split(text, ' ') AS sl
-              FROM documents))
-      WHERE p.w <> '') d
-    JOIN (
-      SELECT w, unnest(list_transform(generate_series(1, len(t)),
-               j -> struct_pack(tpos := j - 1, token := t[j]))) AS q
-      FROM w{BPE_MERGES}) s ON s.w = d.w
-    CROSS JOIN LATERAL (SELECT cast(d.wpos AS INT) AS wpos,
-                               cast(s.q.tpos AS INT) AS tpos,
-                               s.q.token AS token) tp
-    """
-
-
-def _o_bpe_train(mode: str = "char") -> str:
-    from cityfinder_spark.operators.bpe import BPE_MERGES
-
-    unions = "\n    UNION ALL ".join(
-        f"SELECT {r} AS merge_rank, lhs, rhs, cnt AS pair_count FROM win{r}"
-        for r in range(1, BPE_MERGES + 1)
-    )
-    return f"""
-    WITH {_o_bpe_cte(BPE_MERGES, mode)}
-    SELECT cast(merge_rank AS INT) AS merge_rank, lhs, rhs, pair_count
-    FROM ({unions})
-    """
-
-
-def _o_bpe_cte(n_merges: int, mode: str = "char") -> str:
-    """Chained per-merge CTEs. Every CTE is AS MATERIALIZED: each
-    round references the previous round's word table ~3 times
-    (pair counts, candidates, rebuild), so DuckDB's default CTE
-    inlining re-expands the chain ~3^n_merges times — the 8-merge
-    oracle took ~20 min inlined vs 0.3 s materialized (measured r5).
-    Materialization also matches the operator's per-round
-    checkpointing, so the replay mirrors the execution shape."""
-    from cityfinder_spark.operators.bpe import BPE_EOW
-
-    if mode == "char":
-        syms = (
-            f"""list_append(list_transform(generate_series(1, length(w)),
-               i -> substring(w, i, 1)), '{BPE_EOW}')"""
-        )
-    else:  # bytes: UTF-8 bytes as fixed-width two-hex-digit symbols, no EOW
-        syms = (
-            """list_transform(generate_series(1, octet_length(encode(w))),
-               i -> substring(hex(encode(w)), 2 * i - 1, 2))"""
-        )
-    parts = [
-        f"""w0 AS MATERIALIZED (
-      SELECT w, cast(count(*) AS bigint) AS freq,
-             {syms} AS t
-      FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-      WHERE w <> '' GROUP BY w)"""
-    ]
-    for r in range(1, n_merges + 1):
-        p = r - 1
-        parts.append(
-            f"""pr{r} AS MATERIALIZED (
-      SELECT p.lhs AS lhs, p.rhs AS rhs, cast(sum(freq) AS bigint) AS cnt
-      FROM (SELECT freq,
-              unnest(CASE WHEN len(t) < 2
-                     THEN []::STRUCT(lhs VARCHAR, rhs VARCHAR)[]
-                     ELSE list_transform(generate_series(1, len(t) - 1),
-                       i -> struct_pack(lhs := t[i], rhs := t[i + 1]))
-                     END) AS p
-            FROM w{p})
-      GROUP BY 1, 2)"""
-        )
-        parts.append(
-            f"""win{r} AS MATERIALIZED (SELECT lhs, rhs, cnt FROM pr{r} WHERE cnt >= 2
-           ORDER BY cnt DESC, lhs ASC, rhs ASC LIMIT 1)"""
-        )
-        parts.append(
-            f"""cd{r} AS MATERIALIZED (
-      SELECT w, unnest(list_filter(
-          CASE WHEN len(t) < 2 THEN []::BIGINT[]
-               ELSE list_transform(generate_series(1, len(t) - 1), i -> i)
-          END,
-          i -> t[i] = x.lhs AND t[i + 1] = x.rhs)) AS i
-      FROM w{p}, win{r} x)"""
-        )
-        parts.append(
-            f"""kp{r} AS MATERIALIZED (
-      SELECT w, list(i ORDER BY i) AS k FROM (
-        SELECT w, i FROM (
-          SELECT w, i, min(i) OVER (PARTITION BY w, grp) AS g0 FROM (
-            SELECT w, i,
-                   i - row_number() OVER (PARTITION BY w ORDER BY i) AS grp
-            FROM cd{r}))
-        WHERE (i - g0) % 2 = 0) GROUP BY w)"""
-        )
-        parts.append(
-            f"""w{r} AS MATERIALIZED (
-      SELECT s.w, s.freq,
-        list_filter(list_transform(generate_series(1, len(s.t)), j -> CASE
-          WHEN kp.k IS NOT NULL AND list_contains(kp.k, j)
-            THEN s.t[j] || s.t[j + 1]
-          WHEN kp.k IS NOT NULL AND list_contains(kp.k, j - 1) THEN NULL
-          ELSE s.t[j] END), x -> x IS NOT NULL) AS t
-      FROM w{p} s LEFT JOIN kp{r} kp USING (w))"""
-        )
-    return ",\n    ".join(parts)
-
-
 def q_tokenize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trainer-input tokenization: map every corpus token to its
     vocab id (vocab = the vocab_topk ranks), OOV -> 0. posexplode is a
@@ -2325,53 +2102,6 @@ def _o_importance_sample() -> str:
            {sc.round6_sql(avg)} AS avg_delta,
            (cast(sum(dlp) AS BIGINT) >= {_DSIR_TAU} * count(*)) AS accept
     FROM scored GROUP BY 1
-    """
-
-
-_URL_QUOTA = 9  # < the 13 paths/site ceiling, so domain caps really bind
-
-
-def q_url_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL curation gate (C4/RefinedWeb shape): documents with
-    deterministic crawl URLs (sqlcompat.url_docs_sql — identical
-    expression text both engines; scheme-case/www/query/fragment/
-    trailing-slash noise planted), canonicalized by the regexp chain,
-    URL-deduped by a lag window, domain-capped by an md5-ordered
-    row_number — ONE exchange on domain for both windows. The value
-    hash covers the exact canonical strings AND the verdict bits, so
-    Java-regex vs RE2 agreement and the window semantics are both
-    under test."""
-    from cityfinder_spark.operators.urlops import curate_urls
-
-    load_views(spark, sf_dir, ("documents",))
-    return curate_urls(spark.sql(sc.url_docs_sql()), quota=_URL_QUOTA)
-
-
-def _o_url_curation() -> str:
-    canon = (
-        "regexp_replace(regexp_replace(regexp_replace(regexp_replace("
-        "lower(url), '^https?://', ''), '^www\\.', ''), '[?#].*$', ''),"
-        " '/$', '')"
-    )
-    return f"""
-    WITH src AS ({sc.url_docs_sql()}),
-    c AS (SELECT doc_id, {canon} AS canon_url FROM src),
-    d AS (SELECT doc_id, canon_url,
-                 regexp_extract(canon_url, '^[^/]+', 0) AS domain
-          FROM c),
-    du AS (SELECT *,
-             coalesce(lag(canon_url) OVER (PARTITION BY domain
-                        ORDER BY canon_url, doc_id) = canon_url,
-                      false) AS is_dup
-           FROM d),
-    r AS (SELECT *,
-            row_number() OVER (PARTITION BY domain
-              ORDER BY is_dup, md5(canon_url), canon_url, doc_id)
-              AS domain_rank
-          FROM du)
-    SELECT doc_id, canon_url, domain, is_dup, domain_rank,
-           (NOT is_dup AND domain_rank <= {_URL_QUOTA}) AS keep
-    FROM r
     """
 
 
@@ -3972,37 +3702,6 @@ def q_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Acoustic features per clip via Arrow-batched decode. RMS and ZCR
-    are exact (integer sums scaled by powers of two -> bit-identical
-    across engines) and oracled via the DuckDB splitmix64 replay;
-    spectral_centroid (rfft) stays out of the contract projection —
-    an FFT is not SQL-expressible — and is pytest-pinned instead."""
-    from cityfinder_spark.operators.audio_ops import audio_features
-
-    n = max(200, spark.read.parquet(f"{sf_dir}/orders.parquet").count() // 20)
-    return audio_features(_media_table(spark, "audio", n)).select(
-        "audio_id", "fmt", "sr", "n_samples", "duration_s", "rms", "zcr"
-    )
-
-
-def q_audio_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio payload-invariant verdicts (SNR>=40 dB lossy / byte-exact
-    lossless + captions), mirroring image_pipeline. The lossy SNR is
-    closed-form (quantization error of sample u is exactly u & 15), so
-    the oracle replays it; the terminal log10 is floor-rounded on both
-    sides like every computed double."""
-    from cityfinder_spark.operators.audio_ops import check_audio_invariants
-
-    n = max(200, spark.read.parquet(f"{sf_dir}/orders.parquet").count() // 20)
-    return check_audio_invariants(_media_table(spark, "audio", n)).select(
-        "audio_id",
-        round_digits_col(F.col("snr_db"), sc.ROUND_DIGITS).alias("snr_db"),
-        "snr_ok",
-        "caption_ok",
-    )
-
-
 # ---------------- event-stream queries (batch twins) ----------------
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5390,53 +5089,6 @@ def _o_token_stats() -> str:
     """
 
 
-def _o_pack_sequences() -> str:
-    return f"""
-    WITH t AS (
-      SELECT doc_id,
-             len(string_split(text, ' ')) AS n_tokens,
-             (doc_id * 48271) % 100000 AS h
-      FROM documents
-    ), c AS (
-      SELECT doc_id, n_tokens,
-             coalesce(SUM(n_tokens) OVER (
-               ORDER BY h, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start
-      FROM t
-    )
-    SELECT doc_id, n_tokens,
-           cast(floor(start / {PACK_BUDGET}.0) as bigint) AS bin_id,
-           cast(start % {PACK_BUDGET} as bigint) AS bin_offset
-    FROM c
-    """
-
-
-def _o_bin_manifest() -> str:
-    b = PACK_BUDGET
-    return f"""
-    WITH t AS (
-      SELECT doc_id,
-             len(string_split(text, ' ')) AS n_tokens,
-             (doc_id * 48271) % 100000 AS h
-      FROM documents
-    ), c AS (
-      SELECT doc_id, n_tokens,
-             coalesce(SUM(n_tokens) OVER (
-               ORDER BY h, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start
-      FROM t
-    )
-    SELECT cast(u.b AS BIGINT) AS bin_id, doc_id,
-           cast(greatest(start, u.b * {b}) - start AS BIGINT) AS doc_from,
-           cast(greatest(start, u.b * {b}) - u.b * {b} AS BIGINT) AS bin_from,
-           cast(least(start + n_tokens, (u.b + 1) * {b})
-             - greatest(start, u.b * {b}) AS BIGINT) AS seg_len
-    FROM c CROSS JOIN
-         unnest(generate_series(cast(start // {b} as bigint), cast((start + n_tokens - 1) // {b} as bigint))) AS u(b)
-    WHERE n_tokens > 0
-    """
-
-
 def _o_decontaminate() -> str:
     return """
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
@@ -5791,10 +5443,9 @@ def _o_postal_scan() -> str:
 
 # ---------------- media oracles: DuckDB splitmix64 replay ----------------
 #
-# The fake codecs' payloads are pure functions of the row id: pixel j of
-# image i is splitmix64(2*i + j) & 0xFF, sample t of clip i is
-# splitmix64(4*i + t) & 0xFFFF (codecs/fakeimage.py:_mix64, gen_pixels /
-# codecs/fakeaudio.py:gen_samples). splitmix64 is replayed bit-exactly in
+# The fake codec's payloads are pure functions of the row id: pixel j of
+# image i is splitmix64(2*i + j) & 0xFF (codecs/fakeimage.py:_mix64,
+# gen_pixels). splitmix64 is replayed bit-exactly in
 # DuckDB with HUGEINT modular arithmetic (64x64-bit multiply decomposed
 # into 32-bit halves so no intermediate exceeds 2^97), which makes every
 # media stat with exact integer arithmetic independently recomputable —
@@ -6017,84 +5668,6 @@ def _o_video_frame_sample() -> str:
              unnest(generate_series(0, nf - 1, 2)) AS f
       FROM vids)
     SELECT video_id, cast(f AS INT) AS frame_idx FROM frames
-    """
-
-
-def _duck_audio_cte(divisor: int) -> str:
-    """auds CTE (datagen/audio.py:_row — sr cycles 8000/16000/22050,
-    n = 256+(i*37)%1792, fmt alternates) + flat sample CTE with
-    x0 = 4*i + t, then decoded int16 value s (u = z & 0xFFFF; ogg
-    drops the 4 low bits; int16 = u - 65536 when the sign bit is set)
-    and the lossy quantization error e = u & 15."""
-    return f"""
-    auds AS (
-      SELECT cast(i AS HUGEINT) AS i,
-             CASE i % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000 ELSE 22050 END AS sr,
-             256 + (i * 37) % 1792 AS n,
-             CASE WHEN i % 2 = 0 THEN 'wav' ELSE 'ogg' END AS fmt
-      FROM generate_series(0, 999999) g(i)
-      WHERE i < greatest(200, (SELECT count(*) FROM orders) // {divisor})),
-    pt AS (SELECT *, unnest(generate_series(0, n - 1)) AS t FROM auds),
-    px AS (SELECT *, cast(4 * i + t AS HUGEINT) AS x0 FROM pt),
-    {_duck_mix64("px")},
-    samp AS (
-      SELECT i, sr, n, fmt, t,
-             CASE WHEN fmt = 'wav' THEN cast(z % 65536 AS BIGINT)
-                  ELSE cast(z % 65536 AS BIGINT) & 65520 END AS u,
-             cast(z % 65536 AS BIGINT) AS ru,
-             cast(z % 65536 AS BIGINT) & 15 AS e
-      FROM mx),
-    vals AS (
-      SELECT i, sr, n, fmt, t, e,
-             u - 65536 * cast(u >= 32768 AS BIGINT) AS s,
-             ru - 65536 * cast(ru >= 32768 AS BIGINT) AS rs
-      FROM samp)
-    """
-
-
-_DUCK_AUD_ID = "'aud' || lpad(cast(i AS VARCHAR), 12, '0')"
-
-
-def _o_audio_features() -> str:
-    """RMS/ZCR replay: pcm/32768 squares and their sums are exact
-    multiples of 2^-30 (< 2^53), so sum-then-divide is bit-identical
-    to NumPy's pairwise mean; ZCR = sign-flip count / (n-1) with
-    lag() reproducing the x[1:] vs x[:-1] comparison (s = 0 counts as
-    non-negative, matching np.signbit)."""
-    return f"""
-    WITH {_duck_audio_cte(20)},
-    flips AS (
-      SELECT *, cast((s < 0) !=
-               (lag(s) OVER (PARTITION BY i ORDER BY t) < 0) AS INT) AS flip
-      FROM vals)
-    SELECT {_DUCK_AUD_ID} AS audio_id, fmt,
-           cast(sr AS INT) AS sr, cast(n AS INT) AS n_samples,
-           cast(n AS DOUBLE) / sr AS duration_s,
-           sqrt((cast(sum(s * s) AS DOUBLE) / 1073741824.0) / n) AS rms,
-           cast(sum(flip) AS DOUBLE) / (n - 1) AS zcr
-    FROM flips GROUP BY i, sr, n, fmt
-    """
-
-
-def _o_audio_pipeline() -> str:
-    """SNR verdict replay: wav is byte-exact (999.0 cap); ogg SNR =
-    10*log10(mean(s^2)/mean(e^2)) with both means exact integer sums
-    over n, floor-rounded after the libm log10 on both sides."""
-    return f"""
-    WITH {_duck_audio_cte(20)},
-    sums AS (
-      -- numerator is the UNQUANTIZED reference power (snr_db compares
-      -- the regenerated reference against the decoded samples)
-      SELECT i, fmt,
-             cast(sum(rs * rs) AS DOUBLE) / n AS ms,
-             cast(sum(e * e) AS DOUBLE) / n AS me
-      FROM vals GROUP BY i, fmt, n)
-    SELECT {_DUCK_AUD_ID} AS audio_id,
-           CASE WHEN fmt = 'wav' THEN 999.0
-                ELSE {sc.round_sql("10.0 * log10(ms / me)", sc.ROUND_DIGITS)}
-           END AS snr_db,
-           true AS snr_ok, true AS caption_ok
-    FROM sums
     """
 
 
@@ -6828,8 +6401,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact": q_dedup_exact,
         "token_stats": q_token_stats,
         "length_outliers": q_length_outliers,
-        "pack_sequences": q_pack_sequences,
-        "bin_manifest": q_bin_manifest,
         "corpus_split": q_corpus_split,
         "decontaminate": q_decontaminate,
         "split_overlap": q_split_overlap,
@@ -6839,14 +6410,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "token_percentiles": q_token_percentiles,
         "length_buckets": q_length_buckets,
         "vocab_topk": q_vocab_topk,
-        "bpe_train": q_bpe_train,
-        "bpe_train_bytes": q_bpe_train_bytes,
-        "bpe_segment": q_bpe_segment,
-        "bpe_segment_bytes": q_bpe_segment_bytes,
         "bm25_search": q_bm25_search,
         "lm_score": q_lm_score,
         "pii_redact": q_pii_redact,
-        "url_curation": q_url_curation,
         "importance_sample": q_importance_sample,
         "tokenize_ids": q_tokenize_ids,
         "quality_topk": q_quality_topk,
@@ -6896,8 +6462,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "image_diversity": q_image_diversity,
         "image_quarantine": q_image_quarantine,
         "video_frame_sample": q_video_frame_sample,
-        "audio_features": q_audio_features,
-        "audio_pipeline": q_audio_pipeline,
         "events_windowed": q_events_windowed,
         "events_asof": q_events_asof,
         "events_sessionize": q_events_sessionize,
@@ -6976,8 +6540,6 @@ def oracle_sql() -> dict[str, str]:
         "dedup_exact": _o_dedup_exact(),
         "token_stats": _o_token_stats(),
         "length_outliers": _o_length_outliers(),
-        "pack_sequences": _o_pack_sequences(),
-        "bin_manifest": _o_bin_manifest(),
         "corpus_split": _o_corpus_split(),
         "decontaminate": _o_decontaminate(),
         "split_overlap": _o_split_overlap(),
@@ -6987,14 +6549,9 @@ def oracle_sql() -> dict[str, str]:
         "token_percentiles": _o_token_percentiles(),
         "length_buckets": _o_length_buckets(),
         "vocab_topk": _o_vocab_topk(),
-        "bpe_train": _o_bpe_train(),
-        "bpe_train_bytes": _o_bpe_train(mode="bytes"),
-        "bpe_segment": _o_bpe_segment(),
-        "bpe_segment_bytes": _o_bpe_segment(mode="bytes"),
         "bm25_search": _o_bm25_search(),
         "lm_score": _o_lm_score(),
         "pii_redact": _o_pii_redact(),
-        "url_curation": _o_url_curation(),
         "importance_sample": _o_importance_sample(),
         "tokenize_ids": _o_tokenize_ids(),
         "quality_topk": _o_quality_topk(),
@@ -7087,8 +6644,6 @@ def oracle_sql() -> dict[str, str]:
         "multimodal_curation": _o_multimodal_curation(),
         "image_resize": _o_image_resize(),
         "video_frame_sample": _o_video_frame_sample(),
-        "audio_features": _o_audio_features(),
-        "audio_pipeline": _o_audio_pipeline(),
     }
 
 

@@ -8,7 +8,9 @@ Reimplements the reference's PostalCodeFinder
     (postalCode.go:58-73, J4) -> broadcast left equi-join, NULLs on
     miss; result City synthesized from the entry (name = PlaceName,
     coords from entry; postalCode.go:64-69);
-  * country code uppercased at the boundary (routes.go:64, P5).
+  * only the query's country code is uppercased at the boundary
+    (routes.go:64, P5); the stored code is compared and de-duplicated
+    as written, so a key stored only as `bc` is never found.
 """
 
 from __future__ import annotations
@@ -46,7 +48,7 @@ def city_by_postal(
     dim = postal if deduped else dedup_postal(postal)
     dim = F.broadcast(
         dim.select(
-            F.upper(F.col("country_code")).alias("country_code"),
+            F.col("country_code"),
             F.col("postal_code"),
             F.col("place_name").alias("name"),
             F.col("lat").cast("double").alias("c_lat"),

@@ -20,6 +20,14 @@ def pin_blas_threads() -> None:
         os.environ.setdefault(var, "1")
 
 
+def _default_driver_mem() -> str:
+    """Half the host's RAM, at most 48g. A heap larger than the host
+    lets Spark's memory manager keep caching and buffering past physical
+    memory until the OS kills the driver JVM."""
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, min(48, total // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "cityfinder_spark",
     cores: int | str = "*",
@@ -51,7 +59,7 @@ def get_spark(
         # (measured ~7% wall there). Payload rows stay bounded: the widest
         # bytes rows are ~3 KB -> ~200 MB per batch per worker.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         # broadcast threshold: the cities cover table is the build side of
         # every hot join; keep the auto threshold generous in sandbox.

@@ -228,32 +228,6 @@ def pii_docs_sql(documents: str = "documents") -> str:
     """
 
 
-def url_docs_sql(documents: str = "documents") -> str:
-    """Crawl-corpus shape: the documents table with a deterministic
-    source URL derived from doc_id — identical expression text in
-    Spark and DuckDB. Varies scheme (http/https), leading www., a
-    tracking query string, a fragment, and a trailing slash so the
-    canonicalizer has real work; the canonical URL collapses to
-    (doc_id % 7, % 3, % 13) -> 273 distinct canonical URLs / 21
-    domains, so URL dups and domain-cap overflows both occur at
-    contract scale (500 docs)."""
-    return f"""
-    SELECT doc_id,
-           CASE WHEN doc_id % 2 = 0 THEN 'https://' ELSE 'HTTP://' END
-           || CASE WHEN doc_id % 5 = 0 THEN 'www.' ELSE '' END
-           || 'site-' || cast(doc_id % 7 as string) || '.ex'
-           || CASE doc_id % 3 WHEN 0 THEN '.com' WHEN 1 THEN '.org'
-                              ELSE '.net' END
-           || '/p/' || cast(doc_id % 13 as string)
-           || CASE WHEN doc_id % 4 = 0 THEN '/' ELSE '' END
-           || CASE WHEN doc_id % 3 = 0
-                   THEN '?utm_source=feed&ref=' || cast(doc_id % 11 as string)
-                   ELSE '' END
-           || CASE WHEN doc_id % 7 = 0 THEN '#top' ELSE '' END AS url
-    FROM {documents}
-    """
-
-
 def images_from_orders_sql(orders: str = "orders") -> str:
     """Image-shaped fact rows (geotag + raster dims) for tiling ops."""
     return f"""

@@ -107,6 +107,10 @@ def _postal(spark):
         ("FR", "75001", "Paris Louvre", 48.86, 2.33, 6, 1),  # last write wins
         ("US", "10001", "New York", 40.75, -73.99, 4, 2),
         ("DE", "10115", "Berlin Mitte", 52.53, 13.38, 6, 3),
+        ("ca", "V5K", "Vancouver", 49.28, -123.04, 4, 4),  # lower case only
+        ("GB", "SW1A", "London", 51.50, -0.14, 4, 5),
+        ("GB", "SW1A", "Westminster", 51.50, -0.13, 4, 6),  # last GB write
+        ("gb", "SW1A", "Whitehall", 51.50, -0.12, 4, 7),  # a different key
     ]
     return spark.createDataFrame(
         pd.DataFrame(
@@ -127,14 +131,24 @@ def test_postal_last_write_wins(spark):
 def test_postal_lookup_hit_miss_case(spark):
     q = spark.createDataFrame(
         pd.DataFrame(
-            [(0, "75001", "fr"), (1, "10001", "US"), (2, "99999", "US")],
+            [
+                (0, "75001", "fr"), (1, "10001", "US"), (2, "99999", "US"),
+                (3, "V5K", "CA"), (4, "SW1A", "GB"), (5, "SW1A", "gb"),
+            ],
             columns=["q_id", "q_code", "q_country"],
         )
     )
-    out = {r["q_id"]: r for r in city_by_postal(q, _postal(spark)).collect()}
+    rows = city_by_postal(q, _postal(spark)).collect()
+    assert sorted(r["q_id"] for r in rows) == [0, 1, 2, 3, 4, 5]  # one row each
+    out = {r["q_id"]: r for r in rows}
     assert out[0]["name"] == "Paris Louvre"  # lowercase country uppercased (routes.go:64)
     assert out[1]["name"] == "New York" and out[1]["accuracy"] == 4
     assert out[2]["name"] is None  # nil on miss (postalCode.go:62-63)
+    # the stored code is matched as written: `ca` is not `CA`, and the
+    # `gb` row neither answers a `GB` query nor displaces the last `GB` row
+    assert out[3]["name"] is None
+    assert out[4]["name"] == "Westminster"
+    assert out[5]["name"] == "Westminster"
 
 
 def test_name_lookup_strategies_equal(spark):

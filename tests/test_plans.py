@@ -76,21 +76,6 @@ def test_query_sides_spread_at_the_scan(spark):
     assert "pt_id" not in scan_side  # derivation not pushed into the scan task
 
 
-def test_pack_sequences_has_no_global_sort(spark):
-    """The packing prefix sum must stay distributed: the plan shuffles
-    on the arithmetic hash-chunk key and cumulates offsets over the
-    tiny n_chunks-row side — never a rangepartitioning/global sort of
-    the fact table (the single-window formulation this replaces)."""
-    C.load_views(spark, SF, ("documents",))
-    from cityfinder_spark.operators.packing import pack_sequences
-
-    plan = _plan(pack_sequences(spark.table("documents"), budget=128))
-    assert "rangepartitioning" not in plan.lower()
-    assert "hashpartitioning(__chunk" in plan
-    # offset side reaches the fact side as a broadcast, not a shuffle
-    assert "BroadcastExchange" in plan
-
-
 def test_no_nested_loop_joins_across_the_contract(spark):
     """Suite-wide net: no contract key's physical plan may contain a
     BroadcastNestedLoopJoin or CartesianProduct, except the documented

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
@@ -282,6 +283,42 @@ def test_mixture_sample_zero_fact_shuffle_plan(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     assert "SortMergeJoin" not in plan
+
+
+# ----------------------------------------------------------- corpus_split
+
+
+@pytest.fixture(scope="module")
+def docs(spark):
+    rng = np.random.default_rng(9)
+    rows = [
+        (i, " ".join(f"w{rng.integers(0, 50)}" for _ in range(int(rng.integers(1, 40)))))
+        for i in range(400)
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_corpus_split_deterministic_and_leakage_safe(spark, docs):
+    from cityfinder_spark.operators.sampling import corpus_split
+
+    full = {r["doc_id"]: r["split"] for r in corpus_split(docs).collect()}
+    assert set(full.values()) == {"train", "val", "test"}
+    # membership is a pure function of the id: a subset sees the SAME
+    # assignments (no leakage across reruns / incremental loads)
+    sub = {r["doc_id"]: r["split"]
+           for r in corpus_split(docs.where("doc_id % 3 = 0")).collect()}
+    assert all(full[k] == v for k, v in sub.items())
+
+
+def test_corpus_split_independent_of_rate_sample(spark, docs):
+    """The split hash uses a different multiplier than sample_hash:
+    a 5% rate-sample must still contain all three splits (with the
+    SAME hash the survivors would be exactly the 'val' band)."""
+    from cityfinder_spark.operators.sampling import corpus_split, rate_sample
+
+    kept = corpus_split(rate_sample(docs, "doc_id", 0.1))
+    splits = {r["split"] for r in kept.collect()}
+    assert splits == {"train", "val", "test"}
 
 
 # ---------------------------------------------------------- cluster_split
